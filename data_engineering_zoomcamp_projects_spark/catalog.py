@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import memo, stat_fingerprint
+
 TABLES = (
     "region",
     "nation",
@@ -35,11 +37,6 @@ TABLES = (
 #: for those from observed stats, we only hard-broadcast the fixed dims).
 FIXED_DIMS = ("region", "nation")
 
-
-#: (sorted input files) -> total parquet row groups — footer metadata
-#: of immutable corpus files, probed once per session instead of once
-#: per widen_if_narrow call (the _CODEBOOK_MEMO discipline)
-_ROW_GROUP_MEMO: dict[tuple, int] = {}
 
 #: one warning per session when the row-group probe degrades (r13
 #: ADVICE: the silent no-op hid the whole widen fix on unrecognized
@@ -88,6 +85,19 @@ def _local_parquet_path(uri: str) -> str:
             raise ValueError(f"non-local file URI {uri!r}, skip probe")
         return unquote(parsed.path) if parsed.scheme else uri
     raise ValueError(f"remote scheme {parsed.scheme!r}, skip probe")
+
+
+def _row_groups(paths: tuple[str, ...]) -> int:
+    """Total parquet row groups of one relation's files."""
+    import pyarrow.parquet as pq
+
+    if len({_table_root(p) for p in paths}) != 1:
+        raise _BenignProbeSkip
+    row_groups = 0
+    for local in paths:
+        with pq.ParquetFile(local) as pf:
+            row_groups += pf.num_row_groups
+    return row_groups
 
 
 def widen_if_narrow(
@@ -157,19 +167,11 @@ def widen_if_narrow(
         try:
             files = df.inputFiles()
             if 0 < len(files) <= 64:
-                key = tuple(sorted(files))
-                if key not in _ROW_GROUP_MEMO:
-                    import pyarrow.parquet as pq
-
-                    paths = [_local_parquet_path(f) for f in files]
-                    if len({_table_root(p) for p in paths}) != 1:
-                        raise _BenignProbeSkip
-                    row_groups = 0
-                    for local in paths:
-                        with pq.ParquetFile(local) as pf:
-                            row_groups += pf.num_row_groups
-                    _ROW_GROUP_MEMO[key] = row_groups
-                parts = min(parts, _ROW_GROUP_MEMO[key])
+                paths = tuple(sorted(_local_parquet_path(f) for f in files))
+                # footer metadata, probed once per content fingerprint
+                build = lambda: _row_groups(paths)  # noqa: E731
+                groups = memo(spark, ("row_groups",) + paths, build, sources=paths)
+                parts = min(parts, groups)
         except _BenignProbeSkip:
             pass
         except Exception as exc:
@@ -229,21 +231,11 @@ def model_cache_path(
     import hashlib
     import os
 
-    src = os.path.join(sf_dir, f"{src_table}.parquet")
+    src = table_path(sf_dir, src_table)
+    fp = stat_fingerprint(src, capped=False)
     if os.path.isdir(src):
-        entries = []
-        for root_dir, _dirs, files in os.walk(src):
-            for f in sorted(files):
-                if f.startswith((".", "_")):
-                    continue  # checksums/_SUCCESS markers, not data
-                st = os.stat(os.path.join(root_dir, f))
-                rel = os.path.relpath(os.path.join(root_dir, f), src)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-        digest = hashlib.md5(";".join(sorted(entries)).encode()).hexdigest()
-        fp = f"dir:{digest}:{params}"
-    else:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}:{params}"
+        fp = f"dir:{hashlib.md5(fp.encode()).hexdigest()}"
+    fp = f"{fp}:{params}"
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return (
@@ -252,134 +244,31 @@ def model_cache_path(
     )
 
 
-#: (absolute path) -> (stat fingerprint, inferred schema). Parquet
-#: schema INFERENCE launches a footer-reading Spark job per
-#: spark.read.parquet call (~0.3-0.5 s of fixed driver+scheduling cost
-#: at any scale factor; an explicit .schema() read is ~50 ms). The
-#: memo holds the schema inference itself produced for these exact
-#: bytes — metadata, never data — keyed by the same (size, mtime_ns)
-#: fingerprint discipline as model_cache_path, so a regenerated corpus
-#: re-infers. At deploy scale this is what a real catalog (metastore /
-#: Iceberg manifest) provides: scans plan from recorded schemas, not
-#: per-query footer sampling (guide §6 driver-side planning costs).
-_PARQUET_SCHEMA_MEMO: dict[str, tuple[str, object]] = {}
-
-#: (application id, absolute path) -> (stat fingerprint, DataFrame).
-#: One step past the schema memo (r18): the OPENED relation itself is
-#: reused while its bytes are unchanged, so repeat opens skip the file
-#: LISTING as well as the inference. A partitioned directory table
-#: with more leaf dirs than
-#: spark.sql.sources.parallelPartitionDiscovery.threshold (default 32
-#: — the persisted ANN index at bench SF has ~48 cell= dirs) lists via
-#: a DISTRIBUTED Spark job on every open (~0.3 s + one job of fixed
-#: machinery per serve, measured warm); the relation memo replays the
-#: already-resolved InMemoryFileIndex instead. Still metadata only —
-#: every execution reads the parquet bytes fresh; a changed file set
-#: or content is a fingerprint miss that re-lists and re-infers.
-#: Keyed by applicationId so frames bound to a stopped session are
-#: never replayed into a new one.
-_PARQUET_RELATION_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-#: loud-degrade flags (one warning per session each, the r13 ADVICE
-#: rule: a silent no-op hides the optimization's absence)
-_FP_DEGRADE_LOGGED = False
-
-#: cap on the per-open fingerprint walk: a directory table with more
-#: data files than this skips memoization entirely (correct behavior —
-#: every open lists/infers as stock Spark does) instead of paying an
-#: O(files) driver-side stat pass per query construction (r17 verdict
-#: item 2). At deploy scale a manifest-backed format (Iceberg/Delta)
-#: replaces this memo outright; sandbox tables sit far below the cap.
-_FP_WALK_CAP = 4096
-
-
-def _parquet_stat_fp(path: str) -> str | None:
-    """(size, mtime_ns) fingerprint of a parquet file, or the folded
-    per-file stats of a directory table (the model_cache_path rule:
-    a directory's own stat is not a content fingerprint). Returns
-    None — memoization skipped, with a once-per-session warning — when
-    the directory holds more than _FP_WALK_CAP data files, so driver
-    time per open stays bounded at any table size."""
-    import os
-
-    if os.path.isdir(path):
-        entries = []
-        for root_dir, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                if f.startswith((".", "_")):
-                    continue
-                if len(entries) >= _FP_WALK_CAP:
-                    global _FP_DEGRADE_LOGGED
-                    if not _FP_DEGRADE_LOGGED:
-                        _FP_DEGRADE_LOGGED = True
-                        import logging
-
-                        logging.getLogger(__name__).warning(
-                            "parquet memo disabled for %s: more than %d "
-                            "data files; every open will re-list and "
-                            "re-infer (use a manifest-backed table "
-                            "format at this size)",
-                            path,
-                            _FP_WALK_CAP,
-                        )
-                    return None
-                st = os.stat(os.path.join(root_dir, f))
-                rel = os.path.relpath(os.path.join(root_dir, f), path)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-        return ";".join(sorted(entries))
-    st = os.stat(path)
-    return f"{st.st_size}:{st.st_mtime_ns}"
-
-
 def read_parquet_fast(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet with the metadata work memoized per
     (path, content fingerprint): the first open of given bytes lists
     and infers exactly as before; while the fingerprint holds,
-    subsequent opens return the SAME resolved relation — no listing
-    job, no footer-sampling job. Data is always read from the parquet
-    files at execution time; only metadata (file index + schema) is
-    reused — the in-process equivalent of a metastore/manifest (guide
-    §6: table formats with manifest metadata avoid directory listing
-    altogether; this is the strongest practical lever on a query whose
-    cost is per-call planning machinery). A non-local path (object
-    store) has no os.stat fingerprint: the memo skips loudly once per
-    session and every open degrades to stock spark.read.parquet."""
-    try:
-        fp = _parquet_stat_fp(path)
-    except OSError:
-        # unreadable/missing path: let spark.read raise its own error
-        # (or, on object-store URIs, read without memoization)
-        global _FP_DEGRADE_LOGGED
-        if not _FP_DEGRADE_LOGGED:
-            _FP_DEGRADE_LOGGED = True
-            import logging
+    subsequent opens in the application return the SAME resolved
+    relation — no listing job, no footer-sampling job. A partitioned
+    directory with more leaf dirs than
+    spark.sql.sources.parallelPartitionDiscovery.threshold (default 32
+    — the persisted ANN index at bench SF has ~48 cell= dirs) would
+    otherwise list via a distributed Spark job on every open. Data is
+    always read from the parquet files at execution time; only
+    metadata (file index + schema) is reused — the in-process
+    equivalent of a metastore/manifest (guide §6: table formats with
+    manifest metadata avoid directory listing altogether). A path with
+    no local stat fingerprint (object store) or over the fingerprint
+    walk cap degrades to stock spark.read.parquet, loudly once per
+    session."""
+    return memo(
+        spark, ("relation", path), lambda: spark.read.parquet(path), sources=(path,)
+    )
 
-            logging.getLogger(__name__).warning(
-                "parquet memo has no local stat fingerprint for %s; "
-                "every open pays full listing + inference",
-                path,
-            )
-        return spark.read.parquet(path)
-    if fp is None:  # over the walk cap — memoization skipped loudly
-        return spark.read.parquet(path)
-    rkey = (spark.sparkContext.applicationId, path)
-    rhit = _PARQUET_RELATION_MEMO.get(rkey)
-    if rhit is not None and rhit[0] == fp:
-        return rhit[1]
-    shit = _PARQUET_SCHEMA_MEMO.get(path)
-    if shit is not None and shit[0] == fp:
-        df = spark.read.schema(shit[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if len(_PARQUET_SCHEMA_MEMO) >= 256:
-            # bounded-memo discipline: generation-dir keys retire as
-            # tables compact; cap instead of growing per session
-            _PARQUET_SCHEMA_MEMO.clear()
-        _PARQUET_SCHEMA_MEMO[path] = (fp, df.schema)
-    if len(_PARQUET_RELATION_MEMO) >= 256:
-        _PARQUET_RELATION_MEMO.clear()
-    _PARQUET_RELATION_MEMO[rkey] = (fp, df)
-    return df
+
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet path of one catalog table under ``sf_dir``."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -408,7 +297,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # conf.set of an unchanged value is cheap.)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = read_parquet_fast(spark, f"{sf_dir}/{name}.parquet")
+    df = read_parquet_fast(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -31,10 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, widen_if_narrow
+from ..catalog import load_table, table_path, widen_if_narrow
 from ..functions.text import shingles, sql_shingle_cte, tokens
 from ..functions.vector import as_double_array, cosine, sql_cosine
 from ..operators.parity import drnd
+from ..session import memo
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,15 +254,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: single-entry memo for the near-dup pair frame (the bounded-memo
-#: discipline of similarity._CODEBOOK_MEMO: cleared on every miss so at
-#: most one checkpointed frame is retained, and a changed session or
-#: sf_dir always rebuilds; in-place parquet regeneration within ONE
-#: application would serve stale pairs — the bench/driver regenerate
-#: between applications)
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized, MATERIALIZED near-dup pair frame
     (doc_a, doc_b, jaccard) — shared infrastructure for everything
@@ -269,28 +261,14 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     census, reachability). Each of those operators used to re-execute
     the full LSH pipeline per query (~17-19 s each at sf1); the pairs
     are model-state-sized (bounded by near-dup density, not the
-    corpus), so one eager localCheckpoint per (session, sf_dir) pays
+    corpus), so one eager localCheckpoint per documents bytes pays
     the pipeline once. `dedup_minhash_lsh` itself keeps its
     un-memoized plan — it IS the certified pair computation."""
-    import contextlib
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for stale in _PAIRS_MEMO.values():
-        # dropping the reference alone leaves the evicted frame's
-        # localCheckpoint blocks pinned on executors until Python GC +
-        # ContextCleaner get around to them — a same-app sf_dir switch
-        # would transiently hold TWO materialized pair frames; unpersist
-        # releases the storage deterministically (suppressed when the
-        # evicted frame belongs to an already-stopped application)
-        with contextlib.suppress(Exception):
-            stale.unpersist()
-    _PAIRS_MEMO.clear()
-    pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
-    _PAIRS_MEMO[key] = pairs
-    return pairs
+    def build() -> DataFrame:
+        return dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
+
+    return memo(spark, ("pairs",), build, sources=(table_path(sf_dir, "documents"),))
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,29 +457,22 @@ def _embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: single-entry memo, (application id) -> one-row hyperplane frame.
-#: The matrix is MODEL STATE (fixed-seed, data-independent), the same
-#: role as the sim_topk_ivf codebook: broadcast once per session, never
-#: inlined as literals (which re-pays seconds of plan construction per
-#: invocation and grows the plan with the model).
-_EMB_PLANES_MEMO: dict[str, DataFrame] = {}
-
-
 def _emb_planes_frame(spark: SparkSession) -> DataFrame:
-    key = spark.sparkContext.applicationId
-    hit = _EMB_PLANES_MEMO.get(key)
-    if hit is not None:
-        return hit
+    """One-row hyperplane frame. The matrix is MODEL STATE (fixed-seed,
+    data-independent), the same role as the sim_topk_ivf codebook:
+    broadcast from one frame per session, never inlined as literals
+    (which re-pays seconds of plan construction per invocation and
+    grows the plan with the model)."""
     from .similarity import _hyperplanes
 
-    planes = _hyperplanes(EMB_N_BANDS * EMB_BITS_PER_BAND)
-    pf = spark.createDataFrame(
-        [([[float(x) for x in plane] for plane in planes],)],
-        "emb_planes array<array<double>>",
-    )
-    _EMB_PLANES_MEMO.clear()  # single-entry: evict any prior app
-    _EMB_PLANES_MEMO[key] = pf
-    return pf
+    def build() -> DataFrame:
+        planes = _hyperplanes(EMB_N_BANDS * EMB_BITS_PER_BAND)
+        return spark.createDataFrame(
+            [([[float(x) for x in plane] for plane in planes],)],
+            "emb_planes array<array<double>>",
+        )
+
+    return memo(spark, ("emb_planes",), build)
 
 
 def embedding_lsh_candidates(

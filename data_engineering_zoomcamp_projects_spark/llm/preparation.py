@@ -14,8 +14,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_path
 from ..functions.text import sql_shingle_cte
+from ..session import memo
 
 #: Knuth multiplicative-hash constant; bucket space kept prime
 _SPLIT_MULT = 2654435761
@@ -196,12 +197,6 @@ def _bloom_positions(col):
     ]
 
 
-#: single-entry bitset memo (cleared on every miss, so at most one
-#: bitset is retained and a changed session/dir always rebuilds — the
-#: bounded-memo discipline from llm/similarity._CODEBOOK_MEMO)
-_BLOOM_MEMO: dict[tuple[str, str], object] = {}
-
-
 def _bench_bloom_broadcast(spark: SparkSession, sf_dir: str, bench: DataFrame):
     """Build (or reuse) the broadcast Bloom bitset over the benchmark
     shingle set — DISTRIBUTED (round-9 rewrite): each partition of the
@@ -212,13 +207,13 @@ def _bench_bloom_broadcast(spark: SparkSession, sf_dir: str, bench: DataFrame):
     where the previous formulation collected every distinct bit
     position (rows proportional to suite shingle count, the one
     driver-side step that scaled with suite size; r8 verdict item 6).
-    Model state like the IVF codebook: built once per (session,
-    sf_dir), broadcast to every executor."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BLOOM_MEMO.get(key)
-    if hit is not None:
-        return hit
-    _BLOOM_MEMO.clear()
+    Model state like the IVF codebook: built once per documents bytes
+    in a session, broadcast to every executor."""
+    build = lambda: _build_bloom_broadcast(spark, bench)  # noqa: E731
+    return memo(spark, ("bloom",), build, sources=(table_path(sf_dir, "documents"),))
+
+
+def _build_bloom_broadcast(spark: SparkSession, bench: DataFrame):
     nbytes = BLOOM_BITS >> 3
     pos_df = (
         bench.select("s")
@@ -244,9 +239,7 @@ def _bench_bloom_broadcast(spark: SparkSession, sf_dir: str, bench: DataFrame):
     bits = np.zeros(nbytes, dtype=np.uint8)
     for row in pos_df.mapInPandas(build, "bits binary").collect():
         bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    bc = spark.sparkContext.broadcast(bits)
-    _BLOOM_MEMO[key] = bc
-    return bc
+    return spark.sparkContext.broadcast(bits)
 
 
 def prep_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,9 +18,10 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_path
 from ..functions.vector import as_double_array, cosine, sql_cosine
 from ..operators.parity import drnd
+from ..session import memo, stat_fingerprint
 
 TOP_K = 10
 #: bucket count must track corpus density: 2^6 = 64 buckets keeps
@@ -563,19 +564,6 @@ def _py_dot(a, b) -> float:
     return acc
 
 
-#: single-entry memo: (application id, sf_dir) -> (codebook frame,
-#: plain cells structure).
-#: The codebook is MODEL STATE, not data — O(k x d) floats
-#: trained/derived once — so both the driver-side collect and the
-#: per-session memo are the correct pattern (the same role as a
-#: broadcast k-means model in any IVF index; re-collecting it per query
-#: run is a spurious job). The dict holds at most ONE entry and is
-#: replaced wholesale on miss, so cycling SparkSessions in a long-lived
-#: process never accumulates frames bound to stopped sessions (last
-#: app+dir only, stale on switch).
-_CODEBOOK_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _cells_frame(spark, cells) -> DataFrame:
     """The two-level codebook's plain-python cells structure as the
     one-row broadcast frame every assignment plan cross-joins — shared
@@ -612,18 +600,25 @@ def _ivf_codebook(spark, sf_dir, corpus):
     return _ivf_model(spark, sf_dir, corpus)[0]
 
 
-def _ivf_model(spark, sf_dir, corpus):
+def _ivf_model(spark, sf_dir, corpus, variant=""):
     """(broadcast cells frame, plain-python cells) — memoized together
     so `build_ann_index` can persist the SAME trained structure into
     the index sidecar that the in-session plans broadcast (r12 verdict
     item 2: the serve half must not need the training corpus to
-    reconstruct the model)."""
+    reconstruct the model). ``variant`` names a training subset of the
+    corpus (build_ann_index's "hist")."""
+    # The codebook is MODEL STATE, not data — O(k x d) floats derived
+    # once per corpus bytes — so both the driver-side collect and the
+    # session memo are the correct pattern (the same role as a
+    # broadcast k-means model in any IVF index).
+    build = lambda: _train_ivf_model(spark, corpus)  # noqa: E731
+    src = (table_path(sf_dir, "embeddings"),)
+    return memo(spark, ("codebook",), build, sources=src, params=(variant,))
+
+
+def _train_ivf_model(spark, corpus):
     import math
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CODEBOOK_MEMO.get(key)
-    if hit is not None:
-        return hit
     n = corpus.count()
     stride = max(
         1, min(math.ceil(n / math.ceil(math.sqrt(n))), ANN_CELL_STRIDE_CAP)
@@ -652,39 +647,20 @@ def _ivf_model(spark, sf_dir, corpus):
         (sid, scv, [c for c, _ in members[sid]], [v for _, v in members[sid]])
         for sid, scv in supers
     ]
-    model = (_cells_frame(spark, cells), cells)
-    _CODEBOOK_MEMO.clear()  # single-entry memo: evict any prior app/dir
-    _CODEBOOK_MEMO[key] = model
-    return model
+    return (_cells_frame(spark, cells), cells)
 
 
-#: (application id, expression key) -> constructed Column. Building
-#: the serve chain's HOF expression trees costs ~0.5 s of py4j
-#: round-trips per serve (measured: _nearest_cells+_pq_lut ~290 ms,
-#: _pq_score ~88 ms — pure driver-side construction, no job), and the
-#: trees depend only on COLUMN NAMES, not on any DataFrame. Unresolved
-#: Columns are immutable expression trees that the analyzer resolves
-#: per plan, so reusing one across plans is exact; keyed by
-#: applicationId so a new session/JVM rebuilds (r17, guide §7.3
-#: driver-side latency).
-_EXPR_MEMO: dict[tuple, Column] = {}
-
-
-def _memo_col(key: tuple, build) -> Column:
-    """Session-scoped memo for pure (name-parameterized) Column
-    expression trees — the _CODEBOOK_MEMO discipline applied to
-    driver-side expression construction."""
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    app = s.sparkContext.applicationId if s is not None else None
-    k = (app,) + key
-    hit = _EXPR_MEMO.get(k)
-    if hit is None:
-        if len(_EXPR_MEMO) >= 64:
-            _EXPR_MEMO.clear()  # bound stale-session entries
-        hit = _EXPR_MEMO[k] = build()
-    return hit
+# Building the serve chain's HOF expression trees costs ~0.5 s of
+# py4j round-trips per serve (measured: _nearest_cells+_pq_lut
+# ~290 ms, _pq_score ~88 ms — pure driver-side construction, no job),
+# and the trees depend only on COLUMN NAMES, not on any DataFrame.
+# Unresolved Columns are immutable expression trees that the analyzer
+# resolves per plan, so reusing one across plans is exact (r17, guide
+# §7.3 driver-side latency).
+def _memo_col(df: DataFrame, key: tuple, build) -> Column:
+    """Session memo for a pure (name-parameterized) Column expression
+    tree, in the application of ``df``, the frame it is applied to."""
+    return memo(df.sparkSession, ("expr",) + key, build)
 
 
 def _nearest_cells(cb, df, vec_col, out_col, n_probe):
@@ -737,7 +713,7 @@ def _nearest_cells(cb, df, vec_col, out_col, n_probe):
     # TWICE per row (caught by the round-10 re-inlining guard;
     # measured 12.8 -> ~9 s at sf1). A named non-cheap column is
     # single-evaluation under CollapseProject.
-    df = df.withColumn("_chosen", _memo_col(("nc_chosen", vec_col), _build_chosen))
+    df = df.withColumn("_chosen", _memo_col(df, ("nc_chosen", vec_col), _build_chosen))
     if n_probe == 1:
         def _build_cell1() -> Column:
             neg = F.transform(
@@ -748,7 +724,7 @@ def _nearest_cells(cb, df, vec_col, out_col, n_probe):
             )
             return -F.array_max(neg)["neg_id"]  # null on empty group
 
-        cell = _memo_col(("nc_cell1", vec_col), _build_cell1)
+        cell = _memo_col(df, ("nc_cell1", vec_col), _build_cell1)
         return df.withColumn(out_col, cell).drop("cells", "_chosen")
 
     def _build_tops() -> Column:
@@ -762,7 +738,7 @@ def _nearest_cells(cb, df, vec_col, out_col, n_probe):
         )
         return F.transform(F.slice(ranked, 1, n_probe), lambda s: s["cent_id"])
 
-    tops = _memo_col(("nc_tops", vec_col, n_probe), _build_tops)
+    tops = _memo_col(df, ("nc_tops", vec_col, n_probe), _build_tops)
     return df.withColumn(out_col, F.explode(tops)).drop("cells", "_chosen")
 
 
@@ -862,11 +838,6 @@ PQ_DSUB = 8
 # should pack into BINARY(8) or two ints.
 assert PQ_K**PQ_M < 2**63, "packed PQ code overflows BIGINT; widen the packing"
 
-#: single-entry memo, same discipline as _CODEBOOK_MEMO; holds the
-#: (broadcast frame, plain nested list) pair _pq_codebook returns
-_PQ_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _pq_frame(spark, pq) -> DataFrame:
     """The PQ codebook's plain nested list as the one-row broadcast
     frame LUT plans cross-join — shared by the corpus-derived and
@@ -891,27 +862,20 @@ def _model_frame(spark, cells, pq) -> DataFrame:
     )
 
 
-#: (application id, model key) -> combined one-row model frame — the
-#: _CODEBOOK_MEMO discipline for the live (corpus-trained) serve path
-_MODEL_FRAME_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _live_model_frame(spark, sf_dir, corpus) -> DataFrame:
     """Combined (cells, pq) one-row frame for the corpus-derived serve
-    path, memoized per (app, sf_dir) like the underlying codebooks."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MODEL_FRAME_MEMO.get(key)
-    if hit is not None:
-        return hit
-    _, cells = _ivf_model(spark, sf_dir, corpus)
-    _, pq = _pq_codebook(spark, sf_dir, corpus)
-    frame = _model_frame(spark, cells, pq)
-    _MODEL_FRAME_MEMO.clear()
-    _MODEL_FRAME_MEMO[key] = frame
-    return frame
+    path, memoized like the underlying codebooks."""
+
+    def build() -> DataFrame:
+        _, cells = _ivf_model(spark, sf_dir, corpus)
+        _, pq = _pq_codebook(spark, sf_dir, corpus)
+        return _model_frame(spark, cells, pq)
+
+    src = (table_path(sf_dir, "embeddings"),)
+    return memo(spark, ("model_frame",), build, sources=src)
 
 
-def _pq_codebook(spark, sf_dir, corpus):
+def _pq_codebook(spark, sf_dir, corpus, variant=""):
     """Per-subspace PQ codebook: `pq[s][p] = the p-th centroid's 8-dim
     slice of subspace s`, returned as (one-row broadcast frame, plain
     nested list) — the frame rides query-side LUT plans, the list ships
@@ -919,12 +883,14 @@ def _pq_codebook(spark, sf_dir, corpus):
     PQ_K corpus vectors by vec_id (the ml_kmeans c0 convention — a
     deploy run Lloyd-trains each subspace; the deterministic derivation
     is what lets DuckDB rebuild the exact codebook). Collect is
-    O(PQ_K x 64) doubles — bounded model state, the _ivf_codebook
-    discipline."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_MEMO.get(key)
-    if hit is not None:
-        return hit
+    O(PQ_K x 64) doubles — bounded model state, memoized like
+    `_ivf_model`."""
+    build = lambda: _train_pq_codebook(spark, corpus)  # noqa: E731
+    src = (table_path(sf_dir, "embeddings"),)
+    return memo(spark, ("pq",), build, sources=src, params=(variant,))
+
+
+def _train_pq_codebook(spark, corpus):
     rows = corpus.select("vec_id", "v").orderBy("vec_id").limit(PQ_K).collect()
     cents = [
         [float(x) for x in r["v"]] for r in sorted(rows, key=lambda r: r["vec_id"])
@@ -938,10 +904,7 @@ def _pq_codebook(spark, sf_dir, corpus):
         [cents[p][s * PQ_DSUB : (s + 1) * PQ_DSUB] for p in range(len(cents))]
         for s in range(PQ_M)
     ]
-    cb = (_pq_frame(spark, pq), pq)
-    _PQ_MEMO.clear()
-    _PQ_MEMO[key] = cb
-    return cb
+    return (_pq_frame(spark, pq), pq)
 
 
 def _pq_codes(df: DataFrame, vec_col: str, pqcb: DataFrame) -> DataFrame:
@@ -1093,11 +1056,11 @@ def _pq_lut(df: DataFrame, vec_col: str, pqcb: DataFrame) -> DataFrame:
     # the LUT tree depends only on the column name — memoized per
     # session (~150 ms of py4j construction per serve otherwise)
     return df.withColumn(
-        "pq_lut", _memo_col(("pq_lut", vec_col), _build_lut)
+        "pq_lut", _memo_col(df, ("pq_lut", vec_col), _build_lut)
     ).drop("pq")
 
 
-def _pq_score(code_col: str, lut_col: str) -> Column:
+def _pq_score(df: DataFrame, code_col: str, lut_col: str) -> Column:
     """Sum_s lut[s][code_s] as exact decimal (left-assoc s=0..7; each
     term is a scale-10 decimal, the running sum re-cast like dot_dec's
     merge — at the (28,10) ACCUMULATOR precision, where addition keeps
@@ -1118,7 +1081,7 @@ def _pq_score(code_col: str, lut_col: str) -> Column:
         return score
 
     # name-parameterized tree — memoized per session (~90 ms/serve)
-    return _memo_col(("pq_score", code_col, lut_col), _build)
+    return _memo_col(df, ("pq_score", code_col, lut_col), _build)
 
 
 def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,9 +1203,10 @@ def _ivfpq_serve(
     cand = corpus_coded.join(
         F.broadcast(query_side),
         (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
+    )
+    cand = cand.withColumn(
         "cos_pq",
-        _pq_score("pq_code", "pq_lut").cast("double")
+        _pq_score(cand, "pq_code", "pq_lut").cast("double")
         / (F.col("qnorm") * F.col("vnorm")),
     )
     w_pq = Window.partitionBy("query_id").orderBy(
@@ -1566,14 +1530,10 @@ def build_ann_index(
         pass
 
     _, corpus = _queries_and_corpus(spark, sf_dir)
-    if variant == "hist":
-        train_src = corpus.filter(F.col("vec_id") % 10 != 7)
-        memo_key = f"{sf_dir}::hist"
-    else:
-        train_src = corpus
-        memo_key = sf_dir
-    cb, cells_py = _ivf_model(spark, memo_key, train_src)
-    _pqcb, pq_py = _pq_codebook(spark, memo_key, train_src)
+    subset = "hist" if variant == "hist" else ""
+    train_src = corpus.filter(F.col("vec_id") % 10 != 7) if subset else corpus
+    cb, cells_py = _ivf_model(spark, sf_dir, train_src, subset)
+    _pqcb, pq_py = _pq_codebook(spark, sf_dir, train_src, subset)
     coded = _coded_frame(
         cb, pq_py, train_src, ["vec_id", "cell", "vnorm", "v", "label"]
     )
@@ -2809,13 +2769,6 @@ def _read_ann_vectors(
     )
 
 
-#: single-entry memo, the _CODEBOOK_MEMO discipline: (application id,
-#: index path) -> (cells frame, pq frame, plain pq list) loaded from
-#: the sidecar — reloading is one JSON read + two one-row frames, so
-#: thrash between index variants costs ~ms, never a Spark job
-_SIDECAR_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _sidecar_model(spark: SparkSession, path: str) -> tuple:
     """The frozen (IVF cells frame, COMBINED (cells, pq) model frame,
     plain pq list) persisted in the index's `_ann_meta.json`. JSON
@@ -2825,24 +2778,26 @@ def _sidecar_model(spark: SparkSession, path: str) -> tuple:
     a serving/appending session run from the index directory alone.
     Slot 1 carries the combined serve-side frame since r18
     (`_model_frame`); corpus-side assignment paths keep using the
-    pure cells frame in slot 0."""
-    import json
+    pure cells frame in slot 0. Memoized per sidecar bytes: reloading
+    is one JSON read + two one-row frames, so thrash between index
+    variants costs ~ms, never a Spark job."""
     import os
 
-    key = (spark.sparkContext.applicationId, path)
-    hit = _SIDECAR_MEMO.get(key)
-    if hit is not None:
-        return hit
-    with open(os.path.join(path, "_ann_meta.json")) as fh:
+    meta = os.path.join(path, "_ann_meta.json")
+    build = lambda: _load_sidecar(spark, meta)  # noqa: E731
+    return memo(spark, ("sidecar",), build, sources=(meta,))
+
+
+def _load_sidecar(spark: SparkSession, meta: str) -> tuple:
+    import json
+
+    with open(meta) as fh:
         model = json.load(fh)["model"]
-    out = (
+    return (
         _cells_frame(spark, model["cells"]),
         _model_frame(spark, model["cells"], model["pq"]),
         model["pq"],
     )
-    _SIDECAR_MEMO.clear()
-    _SIDECAR_MEMO[key] = out
-    return out
 
 
 def append_to_ann_index(spark: SparkSession, path: str, batch: DataFrame) -> int:
@@ -3383,20 +3338,12 @@ def diff_ann_index_generations(
     old_dir = _ann_data_dir(path, old_gen)
     new_dir = _ann_data_dir(path, new_gen)
 
-    def cell_sig(d: str) -> dict[str, frozenset]:
-        out: dict[str, frozenset] = {}
-        for cd in os.listdir(d):
-            if not cd.startswith("cell="):
-                continue
-            sig = []
-            full = os.path.join(d, cd)
-            for f in os.listdir(full):
-                if f.startswith((".", "_")):
-                    continue
-                st = os.stat(os.path.join(full, f))
-                sig.append((f, st.st_size, st.st_mtime_ns))
-            out[cd] = frozenset(sig)
-        return out
+    def cell_sig(d: str) -> dict[str, str]:
+        return {
+            cd: stat_fingerprint(os.path.join(d, cd), capped=False)
+            for cd in os.listdir(d)
+            if cd.startswith("cell=")
+        }
 
     a_sig, b_sig = cell_sig(old_dir), cell_sig(new_dir)
     changed = sorted(

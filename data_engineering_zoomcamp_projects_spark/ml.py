@@ -20,8 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import load_table
+from .catalog import load_table, table_path
 from .operators.parity import DEC
+from .session import memo
 
 #: fixed linear-model weights (deploy-time: broadcast joblib model).
 #: All powers of two: a decimal weight like 1e-5 shifts avg_value's
@@ -278,16 +279,6 @@ def kmeans_k_for(n: int) -> int:
 KMEANS_SCALE = 10_000_000
 
 
-#: single-entry memo, (application id, sf_dir) -> trained centroid
-#: list [(cent_id, [int lattice coords])]. The Lloyd loop is
-#: KMEANS_ITERS-1 collect rounds; `dedup_semantic_semdedup` (the
-#: SemDeDup pruner) reuses the same trained model as
-#: `ml_kmeans_embeddings`, so train once per (session, sf_dir) — the
-#: _CODEBOOK_MEMO / _BPE_MEMO bounded-memo discipline (cleared on any
-#: key miss; a new session or dir always retrains).
-_KMEANS_MEMO: dict[tuple[str, str], list] = {}
-
-
 def kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 1e-7 fixed-point lattice view of the embeddings corpus:
     (vec_id, vq). Plain projection over the parquet scan — callers
@@ -442,21 +433,26 @@ def _kmeans_cache_path(sf_dir: str, k: int = KMEANS_K) -> tuple[str, str]:
 def kmeans_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Train (or reuse) the fixed-point Lloyd model; returns the
     centroid list [(cent_id, [d lattice ints])] — bounded model state
-    (k x d integers). Reuse is two-level: the in-session _KMEANS_MEMO,
-    then a per-(sf_dir, data fingerprint) JSON on local disk (r12,
-    verdict item 4) so a FRESH session — the per-round sweep, the
-    driver gate — pays one tiny metadata read instead of the ~9 s
-    3-round Lloyd loop. Training is exact-integer deterministic, so
-    the persisted model is bit-identical to retraining (pinned by
-    tests/test_ml.py); any cache trouble falls through to training."""
+    (k x d integers). Reuse is two-level: the session memo, then a
+    per-(sf_dir, data fingerprint) JSON on local disk (r12, verdict
+    item 4) so a FRESH session — the per-round sweep, the driver gate —
+    pays one tiny metadata read instead of the ~9 s 3-round Lloyd loop.
+    Training is exact-integer deterministic, so the persisted model is
+    bit-identical to retraining (pinned by tests/test_ml.py); any cache
+    trouble falls through to training."""
+    # `dedup_semantic_semdedup` reuses the model `ml_kmeans_embeddings`
+    # trains. The key carries every constant k derives from (k itself
+    # needs a count job), so changing one retrains.
+    src = (table_path(sf_dir, "embeddings"),)
+    params = (KMEANS_K, KMEANS_CELL_TARGET, KMEANS_ITERS, KMEANS_SCALE)
+    build = lambda: _train_kmeans(spark, sf_dir)  # noqa: E731
+    return memo(spark, ("kmeans",), build, sources=src, params=params)
+
+
+def _train_kmeans(spark: SparkSession, sf_dir: str) -> list:
     import json
     import os
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KMEANS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    _KMEANS_MEMO.clear()
     # derive k from the corpus size FIRST (one metadata-cheap count) —
     # it keys both the disk cache and the seed width (r16: the r15
     # verdict's one scale killer was the hardcoded k=8)
@@ -467,9 +463,7 @@ def kmeans_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
         with open(cache_path) as fh:
             payload = json.load(fh)
         if payload.get("fp") == fp:
-            cents = [(int(c), [int(x) for x in v]) for c, v in payload["cents"]]
-            _KMEANS_MEMO[memo_key] = cents
-            return cents
+            return [(int(c), [int(x) for x in v]) for c, v in payload["cents"]]
     except (OSError, ValueError, KeyError, TypeError):
         # TypeError: structurally corrupt payload under a matching fp
         # (e.g. "cents": 42) must also degrade to retraining
@@ -505,7 +499,6 @@ def kmeans_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
             )
             for cid, cq in cents
         ]
-    _KMEANS_MEMO[memo_key] = cents
     if cache_path is not None:
         try:
             os.makedirs(os.path.dirname(cache_path), exist_ok=True)
@@ -737,73 +730,62 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lg_train_score(spark, feats, LOGREG_FEATS)
 
 
-#: (applicationId, n_feats) -> the full set of name-parameterized
-#: Column lists the lattice-GD loop uses. The loop's expressions are
-#: identical across iterations AND across query calls (they reference
-#: only fixed column names), but the old selectExpr form re-parsed
-#: ~900-char strings once per iteration per call, and a naive
-#: per-Column rebuild is worse still: cProfile showed 3,813 py4j
-#: round trips = 1.7 s per classifier construction, nearly all of it
-#: Column creation. Unresolved Columns are immutable trees the
-#: analyzer resolves per plan, so whole LISTS of them are reusable —
-#: one build per session (the similarity._memo_col discipline, guide
-#: §7.3 driver-side latency), keyed by applicationId so a new session
-#: rebuilds.
-_LG_COLS_MEMO: dict[tuple[str | None, int], dict] = {}
+# The lattice-GD loop's expressions are identical across iterations
+# AND across query calls (they reference only fixed column names),
+# but the old selectExpr form re-parsed ~900-char strings once per
+# iteration per call, and a naive per-Column rebuild is worse still:
+# cProfile showed 3,813 py4j round trips = 1.7 s per classifier
+# construction, nearly all of it Column creation. Unresolved Columns
+# are immutable trees the analyzer resolves per plan, so whole LISTS
+# of them are reusable — one build per session (the
+# similarity._memo_col discipline, guide §7.3 driver-side latency).
+def _lg_cols(df: DataFrame, n_feats: int) -> dict:
+    """The Column lists the lattice-GD loop applies to ``df``."""
+    return memo(df.sparkSession, ("lg_cols", n_feats), lambda: _build_lg_cols(n_feats))
 
 
-def _lg_cols(n_feats: int) -> dict:
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    app = s.sparkContext.applicationId if s is not None else None
-    k = (app, n_feats)
-    hit = _LG_COLS_MEMO.get(k)
-    if hit is None:
-        if len(_LG_COLS_MEMO) >= 64:
-            _LG_COLS_MEMO.clear()  # bound stale-session entries
-        wcols = ["wbq"] + [f"w{j}q" for j in range(n_feats)]
-        z = _lg_z(n_feats)
-        grad_pairs = _lg_grad_pairs(n_feats)
-        hit = _LG_COLS_MEMO[k] = {
-            "w": [F.col(c) for c in wcols],
-            "zero_w": [F.lit(0).cast("long").alias(c) for c in wcols],
-            "grad": [F.expr(e).alias(nm) for e, nm in grad_pairs],
-            "agg": [
-                F.count(F.lit(1)).cast("long").alias("n"),
-                *[
-                    F.sum(F.col(nm).cast("decimal(38,0)")).alias(f"s{nm}")
-                    for _, nm in grad_pairs
-                ],
-                *[F.min(c).alias(c) for c in wcols],
+def _build_lg_cols(n_feats: int) -> dict:
+    wcols = ["wbq"] + [f"w{j}q" for j in range(n_feats)]
+    z = _lg_z(n_feats)
+    grad_pairs = _lg_grad_pairs(n_feats)
+    return {
+        "w": [F.col(c) for c in wcols],
+        "zero_w": [F.lit(0).cast("long").alias(c) for c in wcols],
+        "grad": [F.expr(e).alias(nm) for e, nm in grad_pairs],
+        "agg": [
+            F.count(F.lit(1)).cast("long").alias("n"),
+            *[
+                F.sum(F.col(nm).cast("decimal(38,0)")).alias(f"s{nm}")
+                for _, nm in grad_pairs
             ],
-            "upd": [
-                F.col("n"),
-                *[F.expr(e).alias(c) for e, c in _lg_update_pairs(n_feats)],
-            ],
-            "score": [
-                F.col("y"),
-                *[F.col(c) for c in wcols],
-                F.expr(
-                    f"CASE WHEN ({z} > 0.0) = (y = 1) THEN 1 ELSE 0 END"
-                ).alias("ok"),
-            ],
-            "score_agg": [
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("y").cast("long").alias("n_pos"),
-                F.sum("ok").cast("long").alias("n_correct"),
-                *[F.min(c).alias(c) for c in wcols],
-            ],
-            "filter_out": [
-                F.col("doc_id"),
-                F.col("y"),
-                F.expr(
-                    f"ROUND((0.5 + {z} / (2.0 * (1.0 + ABS({z})))), 6)"
-                ).alias("quality_score"),
-                F.expr(f"CAST(({z}) > 0.0 AS INT)").alias("keep"),
-            ],
-        }
-    return hit
+            *[F.min(c).alias(c) for c in wcols],
+        ],
+        "upd": [
+            F.col("n"),
+            *[F.expr(e).alias(c) for e, c in _lg_update_pairs(n_feats)],
+        ],
+        "score": [
+            F.col("y"),
+            *[F.col(c) for c in wcols],
+            F.expr(
+                f"CASE WHEN ({z} > 0.0) = (y = 1) THEN 1 ELSE 0 END"
+            ).alias("ok"),
+        ],
+        "score_agg": [
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("y").cast("long").alias("n_pos"),
+            F.sum("ok").cast("long").alias("n_correct"),
+            *[F.min(c).alias(c) for c in wcols],
+        ],
+        "filter_out": [
+            F.col("doc_id"),
+            F.col("y"),
+            F.expr(
+                f"ROUND((0.5 + {z} / (2.0 * (1.0 + ABS({z})))), 6)"
+            ).alias("quality_score"),
+            F.expr(f"CAST(({z}) > 0.0 AS INT)").alias("keep"),
+        ],
+    }
 
 
 def _lg_train(
@@ -822,9 +804,12 @@ def _lg_train(
     one less BroadcastExchange + nested-loop join per entry, and the
     optimizer constant-folds the zero terms out of the first
     iteration's gradient (identical arithmetic: the expressions read
-    the same zero longs either way)."""
+    the same zero longs either way). ``iters <= 0`` returns the zero
+    weights as a one-row frame (the DuckDB twin's ``w0``)."""
     feats = feats.localCheckpoint(eager=False)  # shared by all iterations
-    cols = _lg_cols(n_feats)
+    cols = _lg_cols(feats, n_feats)
+    if iters <= 0:
+        return feats, feats.sparkSession.range(1).select(*cols["zero_w"])
     w: DataFrame | None = None  # None = the all-zero init, as literals
     for _ in range(iters):
         if w is None:
@@ -841,7 +826,7 @@ def _lg_train_score(
 ) -> DataFrame:
     """`_lg_train` plus the final training-set scoring pass."""
     feats, w = _lg_train(spark, feats, n_feats, iters)
-    cols = _lg_cols(n_feats)
+    cols = _lg_cols(feats, n_feats)
     score = (
         feats.crossJoin(F.broadcast(w))
         .select(*cols["score"])
@@ -1180,7 +1165,7 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none — driver-contract Part C curation family."""
     feats, w = _lg_train(spark, _tqc_features(spark, sf_dir), TQC_BUCKETS)
     return feats.crossJoin(F.broadcast(w)).select(
-        *_lg_cols(TQC_BUCKETS)["filter_out"]
+        *_lg_cols(feats, TQC_BUCKETS)["filter_out"]
     )
 
 

@@ -95,3 +95,141 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: cap on the fingerprint walk: a directory table with more data files
+#: than this is not memoized (every open lists/infers as stock Spark
+#: does) instead of paying an O(files) driver-side stat pass per lookup.
+#: At deploy scale a manifest-backed format (Iceberg/Delta) replaces
+#: the walk outright; sandbox tables sit far below the cap.
+_FP_WALK_CAP = 4096
+
+#: one warning per session when a fingerprint is unavailable (a silent
+#: no-op hides the memo's absence)
+_FP_DEGRADE_LOGGED = False
+
+
+def stat_fingerprint(path: str, capped: bool = True) -> str | None:
+    """(size, mtime_ns) of a file, or the sorted (relative name, size,
+    mtime_ns) of every data file under a directory — a directory's own
+    stat is no content fingerprint. None past _FP_WALK_CAP files when
+    ``capped``; OSError when the path has no local stat."""
+    if os.path.isdir(path):
+        entries = []
+        for root_dir, _dirs, files in os.walk(path):
+            for f in sorted(files):
+                if f.startswith((".", "_")):
+                    continue
+                if capped and len(entries) >= _FP_WALK_CAP:
+                    _warn_unmemoized(path, f"more than {_FP_WALK_CAP} data files")
+                    return None
+                st = os.stat(os.path.join(root_dir, f))
+                rel = os.path.relpath(os.path.join(root_dir, f), path)
+                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
+        return ";".join(sorted(entries))
+    st = os.stat(path)
+    return f"{st.st_size}:{st.st_mtime_ns}"
+
+
+def _warn_unmemoized(path, why: str) -> None:
+    global _FP_DEGRADE_LOGGED
+    if not _FP_DEGRADE_LOGGED:
+        _FP_DEGRADE_LOGGED = True
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "session memo disabled for %s (%s); state derived from it is "
+            "rebuilt on every call",
+            path,
+            why,
+        )
+
+
+#: the package's one memo of derived session state: slot -> (key,
+#: value). A slot holds one entry; insertion order is age, and the
+#: oldest slot is evicted first once MEMO_SLOTS are filled.
+_MEMO: dict[tuple, tuple] = {}
+MEMO_SLOTS = 256
+#: slot kind -> [hits, misses]
+_MEMO_COUNTS: dict[str, list] = {}
+
+
+def memo(spark, slot: tuple, build, sources=(), params=()):
+    """``build()``, reused while nothing it was derived from changes.
+
+    ``slot[0]`` is the kind the hit/miss counters are kept under; the
+    rest of ``slot`` tells apart entries that coexist (a Column memo's
+    expression key, a relation's path). The entry is served while its
+    key holds: the session's applicationId, the stat_fingerprint of
+    each path in ``sources`` (the files the state is derived from) and
+    ``params``. Any other key rebuilds, and the replaced entry is
+    released. A source without a fingerprint builds unmemoized."""
+    counts = _MEMO_COUNTS.setdefault(slot[0], [0, 0])
+    try:
+        fps = tuple(stat_fingerprint(p) for p in sources)
+    except OSError:
+        _warn_unmemoized(sources, "no local stat")
+        fps = (None,)
+    if None in fps:
+        counts[1] += 1
+        return build()
+    key = (spark.sparkContext.applicationId, tuple(sources), fps, params)
+    old = _MEMO.get(slot)
+    if old is not None and old[0] == key:
+        counts[0] += 1
+        return old[1]
+    counts[1] += 1
+    value = build()
+    # re-read: a memo call nested in build() may have evicted the slot
+    old = _MEMO.pop(slot, None)
+    if old is not None:
+        _release(old[1])
+    elif len(_MEMO) >= MEMO_SLOTS:
+        _release(_MEMO.pop(next(iter(_MEMO)))[1])
+    _MEMO[slot] = (key, value)
+    return value
+
+
+def _release(value) -> None:
+    """Free what an evicted entry held: persisted DataFrames are
+    unpersisted, localCheckpointed ones drop their blocks (which
+    ``DataFrame.unpersist`` does not reach), broadcasts drop their
+    executor copies. Errors are ignored: the entry may belong to a
+    stopped application."""
+    import contextlib
+
+    from py4j.protocol import Py4JError
+    from pyspark import Broadcast
+    from pyspark.sql import DataFrame
+
+    if isinstance(value, tuple):
+        for v in value:
+            _release(v)
+        return
+    with contextlib.suppress(Py4JError):
+        if isinstance(value, Broadcast):
+            value.unpersist()
+        elif isinstance(value, DataFrame):
+            if value.is_cached:
+                value.unpersist()
+            plan = value._jdf.queryExecution().logical()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                rdd = plan.rdd()
+                if rdd.getStorageLevel().isValid():
+                    rdd.unpersist(False)
+
+
+def memo_clear(kind: str | None = None) -> None:
+    """Evict (and release) every entry, or every entry of one kind."""
+    for slot in [s for s in _MEMO if kind is None or s[0] == kind]:
+        _release(_MEMO.pop(slot)[1])
+
+
+def memo_keys(kind: str) -> list:
+    """Keys of the live entries of one kind, oldest first."""
+    return [key for slot, (key, _v) in _MEMO.items() if slot[0] == kind]
+
+
+def memo_stats() -> dict[str, dict[str, int]]:
+    """Hit and miss counts per slot kind since the process started."""
+    return {k: {"hits": h, "misses": m} for k, (h, m) in _MEMO_COUNTS.items()}

@@ -14,8 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import register_tables
+from .catalog import register_tables, table_path
 from .operators.parity import sql_dsum
+from .session import memo
 
 #: staging views: typed/renamed projections of the raw tables
 _STAGING = {
@@ -64,32 +65,27 @@ _MARTS = {
 }
 
 
-#: spark application id -> sf_dir the view chain was LAST built from.
-#: Temp views live for the session, so rebuilding the chain on every
-#: mart call is pure catalog churn (~0.2 s/call). The memo tracks only
-#: the last dir: views are session-global names, so switching sf_dir
-#: overwrites them and a (session, dir) keyed cache would serve stale
-#: views when switching back.
-_LAST_BUILT: dict[str, str] = {}
+_SOURCES = ("orders", "lineitem", "customer")
 
 
-def build_transform_layer(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> list[str]:
+def build_transform_layer(spark: SparkSession, sf_dir: str) -> list[str]:
     """Materialize the staging -> mart chain as temp views (CTAS to
     managed tables at deploy time). Returns the view names in build
-    order — the lineage a dbt DAG would show. Idempotent per session
-    while sf_dir is unchanged; pass ``force=True`` to rebuild (e.g.
-    after underlying files changed)."""
-    names = list(_STAGING) + list(_MARTS)
-    app_id = spark.sparkContext.applicationId
-    if not force and _LAST_BUILT.get(app_id) == sf_dir:
-        return names
-    register_tables(spark, sf_dir, ("orders", "lineitem", "customer"))
-    for name, sql in {**_STAGING, **_MARTS}.items():
-        spark.sql(sql).createOrReplaceTempView(name)
-    _LAST_BUILT[app_id] = sf_dir
-    return names
+    order — the lineage a dbt DAG would show. Rebuilt only when the
+    session, sf_dir or the source tables' bytes change."""
+    # Temp views live for the session, so rebuilding the chain on every
+    # mart call is pure catalog churn (~0.2 s/call). One slot tracks the
+    # last build: views are session-global names, so switching sf_dir
+    # overwrites them and switching back must rebuild.
+
+    def build() -> list[str]:
+        register_tables(spark, sf_dir, _SOURCES)
+        for name, sql in {**_STAGING, **_MARTS}.items():
+            spark.sql(sql).createOrReplaceTempView(name)
+        return list(_STAGING) + list(_MARTS)
+
+    src = tuple(table_path(sf_dir, t) for t in _SOURCES)
+    return memo(spark, ("transform",), build, sources=src)
 
 
 def mart_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

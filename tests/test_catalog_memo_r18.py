@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_engineering_zoomcamp_projects_spark import catalog
+from data_engineering_zoomcamp_projects_spark import catalog, session
 
 
 def test_relation_memo_replays_open_and_reinfers_on_rewrite(spark, tmp_path):
@@ -31,11 +31,11 @@ def test_relation_memo_replays_open_and_reinfers_on_rewrite(spark, tmp_path):
 def test_relation_memo_walk_cap_degrades_to_stock_open(spark, tmp_path, monkeypatch):
     p = str(tmp_path / "big.parquet")
     spark.range(30).repartition(3).write.parquet(p)
-    monkeypatch.setattr(catalog, "_FP_WALK_CAP", 2)
+    monkeypatch.setattr(session, "_FP_WALK_CAP", 2)
     # over the cap: no memoization (every open is a stock read), but
     # reads stay correct
     a = catalog.read_parquet_fast(spark, p)
     b = catalog.read_parquet_fast(spark, p)
     assert a is not b
     assert a.count() == 30 and b.count() == 30
-    assert (spark.sparkContext.applicationId, p) not in catalog._PARQUET_RELATION_MEMO
+    assert all(key[1] != (p,) for key in session.memo_keys("relation"))

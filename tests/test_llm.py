@@ -846,25 +846,29 @@ def test_pca_matches_numpy_and_orders_variance(spark, sf_dir):
 
 
 def test_near_dup_pairs_memo_discipline(spark, sf_dir):
-    """The shared pair frame is memoized per (session, sf_dir), serves
-    the SAME materialized frame on hits, and evicts (single-entry) on
-    an sf_dir change — the bounded-memo discipline the IVF codebook
-    memo established (a keyed-forever dict would pin frames of stopped
-    sessions / regenerated dirs)."""
+    """The shared pair frame is memoized per (session, documents bytes),
+    serves the SAME materialized frame on hits, and evicts
+    (single-entry) on an sf_dir change — a keyed-forever memo would pin
+    frames of stopped sessions / regenerated dirs."""
     from data_engineering_zoomcamp_projects_spark.llm import dedup
+    from data_engineering_zoomcamp_projects_spark.session import (
+        memo_clear,
+        memo_keys,
+    )
 
-    dedup._PAIRS_MEMO.clear()
+    memo_clear("pairs")
     a = dedup.near_dup_pairs(spark, sf_dir)
     b = dedup.near_dup_pairs(spark, sf_dir)
     assert a is b
-    assert len(dedup._PAIRS_MEMO) == 1
+    assert len(memo_keys("pairs")) == 1
     other = "/root/testdata/sf0.001"
     if other != sf_dir:
         c = dedup.near_dup_pairs(spark, other)
         assert c is not a
-        assert len(dedup._PAIRS_MEMO) == 1  # single-entry: old key evicted
-        assert next(iter(dedup._PAIRS_MEMO))[1] == other
-    dedup._PAIRS_MEMO.clear()
+        keys = memo_keys("pairs")
+        assert len(keys) == 1  # single-entry: old key evicted
+        assert keys[0][1] == (f"{other}/documents.parquet",)
+    memo_clear("pairs")
 
 
 def test_semdedup_matches_oracle_and_invariants(spark, sf_dir):
@@ -874,7 +878,7 @@ def test_semdedup_matches_oracle_and_invariants(spark, sf_dir):
     threshold, each pruned vector appears once, and the prune set is
     non-vacuous. Cell consistency is checked against an independent
     call of kmeans_final_assignments (which also exercises the
-    _KMEANS_MEMO reuse path)."""
+    k-means memo reuse path)."""
     from data_engineering_zoomcamp_projects_spark.ml import kmeans_final_assignments
 
     from .oracle import compare, run_oracle

@@ -34,8 +34,14 @@ def test_quality_classifier_learns_separable_corpus(spark, tmp_path):
     where stopword-rich and stopword-free documents have disjoint
     bigram sets trains to >=95% in the same 3 lattice-GD iterations,
     and the DuckDB oracle chain agrees bit-for-bit on the constructed
-    corpus too (not just the shipped test SFs)."""
+    corpus too (not just the shipped test SFs). Zero iterations keep
+    the all-zero weights on both engines: z = 0 predicts y = 0."""
     from data_engineering_zoomcamp_projects_spark.ml import (
+        TQC_BUCKETS,
+        _lg_chain_sql,
+        _lg_train_score,
+        _tqc_feats_ctes,
+        _tqc_features,
         _tqc_sql,
         text_quality_classifier,
     )
@@ -68,6 +74,15 @@ def test_quality_classifier_learns_separable_corpus(spark, tmp_path):
         con.execute(_tqc_sql()).fetchdf(),
         "tqc-separable",
     )
+    untrained = _lg_train_score(
+        spark, _tqc_features(spark, str(tmp_path)), TQC_BUCKETS, iters=0
+    )
+    assert untrained.collect()[0]["n_correct"] == 50
+    problems += compare(
+        untrained,
+        con.execute(_lg_chain_sql(_tqc_feats_ctes(), TQC_BUCKETS, 0)).fetchdf(),
+        "tqc-separable-iters0",
+    )
     con.close()
     assert not problems, "\n".join(problems)
 
@@ -83,6 +98,7 @@ def test_kmeans_centroid_disk_cache_roundtrip(spark, sf_dir):
     import os
 
     from data_engineering_zoomcamp_projects_spark import ml
+    from data_engineering_zoomcamp_projects_spark.session import memo_clear
 
     trained = ml.kmeans_trained_centroids(spark, sf_dir)
     path, fp = ml._kmeans_cache_path(sf_dir)
@@ -91,14 +107,14 @@ def test_kmeans_centroid_disk_cache_roundtrip(spark, sf_dir):
 
     # fresh-session shape: memo cleared -> must come back from disk,
     # bit-identical (no Spark job needed, but equality is the pin)
-    ml._KMEANS_MEMO.clear()
+    memo_clear("kmeans")
     reloaded = ml.kmeans_trained_centroids(spark, sf_dir)
     assert reloaded == trained
 
     # corrupted cache degrades to retraining, same deterministic model
     with open(path, "w") as fh:
         fh.write("{not json")
-    ml._KMEANS_MEMO.clear()
+    memo_clear("kmeans")
     retrained = ml.kmeans_trained_centroids(spark, sf_dir)
     assert retrained == trained
     # and the retrain re-persisted a valid cache
@@ -180,7 +196,8 @@ def test_semdedup_and_kmeans_oracle_parity_at_derived_k(spark, sf_dir):
     oracle rendered at the same k. This is the claim the registered
     floor-k oracle can't test: the lattice Lloyd loop is
     engine-reproducible at ANY k, so big-SF runs at derived k compute
-    exactly what the oracle semantics say."""
+    exactly what the oracle semantics say. The session memo keys on
+    the cell target, so changing it retrains without a manual clear."""
     import duckdb
 
     from data_engineering_zoomcamp_projects_spark import ml
@@ -193,7 +210,6 @@ def test_semdedup_and_kmeans_oracle_parity_at_derived_k(spark, sf_dir):
 
     old_target = ml.KMEANS_CELL_TARGET
     ml.KMEANS_CELL_TARGET = 50
-    ml._KMEANS_MEMO.clear()
     try:
         k = ml.kmeans_k_for(500)
         assert k == 10
@@ -227,4 +243,4 @@ FROM a{ml.KMEANS_ITERS} GROUP BY cell ORDER BY cluster_id
         assert not problems, "\n".join(problems)
     finally:
         ml.KMEANS_CELL_TARGET = old_target
-        ml._KMEANS_MEMO.clear()
+    assert len(ml.kmeans_trained_centroids(spark, sf_dir)) == ml.KMEANS_K
