@@ -35,7 +35,7 @@ from ..catalog import load_table, table_path, widen_if_narrow
 from ..functions.text import shingles, sql_shingle_cte, tokens
 from ..functions.vector import as_double_array, cosine, sql_cosine
 from ..operators.parity import drnd
-from ..session import memo
+from ..session import local_frame, memo
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,12 +462,14 @@ def _emb_planes_frame(spark: SparkSession) -> DataFrame:
     data-independent), the same role as the sim_topk_ivf codebook:
     broadcast from one frame per session, never inlined as literals
     (which re-pays seconds of plan construction per invocation and
-    grows the plan with the model)."""
+    grows the plan with the model). A JVM local relation
+    (`session.local_frame`), so its broadcast runs no Python worker."""
     from .similarity import _hyperplanes
 
     def build() -> DataFrame:
         planes = _hyperplanes(EMB_N_BANDS * EMB_BITS_PER_BAND)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [([[float(x) for x in plane] for plane in planes],)],
             "emb_planes array<array<double>>",
         )

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, table_path, widen_if_narrow
 from ..functions.text import doc_fingerprint_md5
 from ..operators.parity import davg, sql_davg
-from ..session import memo
+from ..session import _release, local_frame, memo
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,7 +729,8 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-contract Part C LLM-data scope (the merge-table companion
     to text_pretokenize_bpe_style's pretokenizer counts)."""
     vocab, out_rows = _bpe_learn(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "merge_rank int, left_sym string, right_sym string, "
         "merged string, pair_count long",
@@ -792,9 +793,11 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         out_rows.append((rank, a, b, a + b, cnt))
-        vocab = vocab.select(
+        prev, vocab = vocab, vocab.select(
             "w", "freq", _bpe_merge_fold(a, b).alias("syms")
         ).localCheckpoint(eager=True)
+        # the eager checkpoint no longer reads the superseded round
+        _release(prev)
     return vocab, out_rows
 
 

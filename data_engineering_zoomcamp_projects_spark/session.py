@@ -97,6 +97,32 @@ def get_spark(
     return spark
 
 
+def local_frame(spark, rows, ddl: str):
+    """``spark.createDataFrame(rows, ddl)`` as a relation the JVM holds.
+
+    The package's one way to turn driver-side state (a model, a merge
+    table) into a DataFrame. A list of rows goes through ``parallelize``
+    into a Python RDD, so every execution of the frame, every broadcast
+    of it included, starts Python workers for a few KB of rows. The
+    same rows as a ``pyarrow.Table`` with the DDL's Arrow schema are
+    planned as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and kept as
+    Arrow batches in the JVM above it: no Python worker runs either
+    way. Schema (nullability included) and values (doubles bit for
+    bit) are those of the list form."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 #: cap on the fingerprint walk: a directory table with more data files
 #: than this is not memoized (every open lists/infers as stock Spark
 #: does) instead of paying an O(files) driver-side stat pass per lookup.

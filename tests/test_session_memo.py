@@ -51,6 +51,55 @@ def test_no_module_level_memo_dict_outside_the_memo_home():
     assert _module_empty_dicts(PKG / "session.py")  # the guard sees its home
 
 
+def _create_dataframe_calls(path: Path) -> list[tuple[str, int]]:
+    """(enclosing top-level function, line) of every ``createDataFrame(``
+    call in a module."""
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                out.append((owner, node.lineno))
+    return out
+
+
+def test_driver_side_frames_go_through_local_frame():
+    """One way to turn driver-side state into a DataFrame:
+    session.local_frame, a JVM local relation. ``createDataFrame`` on a
+    list of rows builds a Python RDD, and every execution of it (each
+    broadcast included) starts Python-worker tasks; only the helper
+    itself may call it."""
+    found = {}
+    for p in sorted(PKG.rglob("*.py")):
+        calls = _create_dataframe_calls(p)
+        if p == PKG / "session.py":
+            assert {owner for owner, _ in calls} == {"local_frame"}, calls
+        elif calls:
+            found[str(p.relative_to(PKG))] = calls
+    assert not found, found
+
+
+def test_bpe_training_pins_only_its_final_vocab(spark, sf_dir):
+    """Each BPE round checkpoints a new vocab frame and releases the
+    one it superseded, so one training leaves exactly one checkpointed
+    RDD pinned: the vocab it returns."""
+    from data_engineering_zoomcamp_projects_spark.llm.textstats import _train_bpe
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    vocab, merges = _train_bpe(spark, sf_dir)
+    try:
+        assert len(merges) > 1  # more than one round was superseded
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        assert new == {vocab._jdf.queryExecution().logical().rdd().id()}
+    finally:
+        session._release(vocab)
+
+
 def test_refill_releases_checkpoint_and_counts(spark):
     """A key change in a slot rebuilds and releases the old entry's
     localCheckpoint blocks (DataFrame.unpersist does not reach them);
